@@ -7,7 +7,6 @@ a lazy DataFrame — Catalyst plans it, nothing executes until an action.
 
 from __future__ import annotations
 
-import itertools
 import logging
 from collections.abc import Callable, Mapping
 
@@ -19,10 +18,6 @@ from .parser import parse
 __all__ = ["MultiResult", "PqlEngine", "compile_pql", "parse"]
 
 logger = logging.getLogger(__name__)
-
-# collision-proof temp-view names for the SQL backend (process-wide
-# counter: two engines in one session never reuse a name)
-_VIEW_IDS = itertools.count()
 
 
 class PqlEngine:
@@ -53,9 +48,11 @@ class PqlEngine:
       round-trip per Column op — ~1000 on a sequence_detect-class
       query); results are bit-identical (backend-equality tested).
       Side effect: each referenced table is registered as a temp view
-      under a collision-proof ``__pql_v<N>_<name>`` name for the
-      duration of the ONE ``spark.sql`` call, then dropped — user temp
-      views of the same name are never touched.
+      under a collision-proof ``__pql_<hex>_<name>`` name for the
+      duration of the ONE ``spark.sql`` call, then dropped from the
+      session catalog — user temp views of the same name are never
+      touched, and no cache entry is evicted (a persisted resolver
+      frame stays cached across queries).
     * ``"df"`` — the DataFrame compiler: one Column-expression
       tree per operator, zero catalog side effects.
     """
@@ -78,7 +75,8 @@ class PqlEngine:
         self.sql_fallbacks = 0
 
     def close(self) -> int:
-        """Drain the PROCESS-GLOBAL tracked-persist registry (see
+        """Release persists only: drain the PROCESS-GLOBAL
+        tracked-persist registry (see
         ``operators._util.tracked_persist``) so a long-lived session
         does not pile up cached blocks in executor storage.  The
         registry is shared by every engine and pipeline in the
@@ -87,7 +85,8 @@ class PqlEngine:
         next use, a perf cost only).  Matches the bench/test usage of
         one drain per query; hold eviction until the last live engine
         closes if several share heavy cached state.  Returns the
-        number of persists evicted.  Safe to call repeatedly."""
+        number of persists evicted.  Safe to call repeatedly.  There
+        are no views to release: every query drops its own."""
         from .operators._util import unpersist_tracked
 
         return unpersist_tracked()
@@ -146,60 +145,39 @@ class PqlEngine:
 
     def _query_via_sql(self, text: str, params: dict) -> DataFrame:
         """The batched compile path: PQL → one SQL string → ONE
-        ``spark.sql`` call.  Each referenced table is registered as a
-        temp view under a fresh ``__pql_v<N>_<name>`` name (never the
-        bare table name — a user's own temp view of that name survives
-        untouched), and dropped right after ``spark.sql`` returns:
-        analysis is eager, so the returned DataFrame's resolved plan no
-        longer needs the catalog entry."""
+        ``spark.sql`` call.  Each referenced table (and each
+        option-bearing csv/json ``externaldata`` source) is registered
+        as a transient view under a fresh ``__pql_<hex>_<name>`` name —
+        never the bare table name, so a user's own temp view of that
+        name survives untouched — and dropped when ``spark.sql``
+        returns (see ``operators._util.transient_views``)."""
+        from .compiler import externaldata_df
+        from .operators._util import transient_views
         from .sql_backend import compile_to_sql
 
-        seen: set[str] = set()
+        with transient_views(self.spark) as view:
+            tables: set[str] = set()
+            ext_srcs: list = []
 
-        def cols(name: str) -> list[str]:
-            seen.add(name)
-            return self._resolver(name).columns
+            def view_name(name: str) -> str:
+                tables.add(name)
+                return view(name)
 
-        uid = next(_VIEW_IDS)
-        view_names = {}
+            def ext_view(src) -> str:
+                ext_srcs.append(src)
+                return view(f"ed{len(ext_srcs) - 1}")
 
-        def view_name(name: str) -> str:
-            return view_names.setdefault(name, f"__pql_v{uid}_{name}")
-
-        # option-bearing externaldata (csv/json): served through the
-        # same transient-view device — the reader-backed DataFrame
-        # (declared schema + options) is registered for the one
-        # spark.sql call, then dropped
-        ext_srcs: list = []
-
-        def ext_view(src) -> str:
-            ext_srcs.append(src)
-            return f"__pql_v{uid}_ed{len(ext_srcs) - 1}"
-
-        sql = compile_to_sql(
-            text, cols, params,
-            width=self.spark.sparkContext.defaultParallelism,
-            view_name_of=view_name,
-            externaldata_view_of=ext_view,
-        )
-        registered = []
-        try:
-            for name in seen:
-                if name in view_names:  # referenced in the emitted SQL
-                    self._resolver(name).createOrReplaceTempView(
-                        view_names[name]
-                    )
-                    registered.append(view_names[name])
+            sql = compile_to_sql(
+                text, lambda name: self._resolver(name).columns, params,
+                width=self.spark.sparkContext.defaultParallelism,
+                view_name_of=view_name,
+                externaldata_view_of=ext_view,
+            )
+            for name in tables:
+                view(name, self._resolver(name))
             for i, src in enumerate(ext_srcs):
-                from .compiler import externaldata_df
-
-                v = f"__pql_v{uid}_ed{i}"
-                externaldata_df(self.spark, src).createOrReplaceTempView(v)
-                registered.append(v)
+                view(f"ed{i}", externaldata_df(self.spark, src))
             return self.spark.sql(sql)
-        finally:
-            for v in registered:
-                self.spark.catalog.dropTempView(v)
 
     def to_sql(
         self, text: str, params: Mapping[str, object] | None = None

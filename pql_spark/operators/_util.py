@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from uuid import uuid4
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,8 +41,45 @@ def rebalance(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
+@contextmanager
+def transient_views(spark: SparkSession) -> Iterator[Callable[..., str]]:
+    """The library's one temp-view lifecycle.
+
+    Yields ``view(alias, frame=None)``, which returns the scope's view
+    name for ``alias`` (``__pql_<hex>_<alias>``, fresh per scope) and,
+    given a frame, registers the frame under it.  Naming and
+    registering can happen apart: a compiler can emit the names first
+    and the frames be registered after; a memory sink registers its
+    reserved name itself.  Every name is dropped on exit.  The body
+    runs its ONE ``spark.sql`` inside the block: analysis is eager, so
+    the returned DataFrame keeps its resolved plan and no longer needs
+    the names.
+
+    The drop goes through the session catalog, which removes the name
+    only.  ``spark.catalog.dropTempView`` would also uncache every
+    cache entry whose plan matches the view's, evicting the caller's
+    persisted inputs and the pipelines' tracked persists (so does the
+    parameterized ``spark.sql(text, df=frame)`` form, whose formatter
+    drops its views that way)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    scope = uuid4().hex[:12]
+    names: dict[str, str] = {}
+
+    def view(alias: str, frame: DataFrame | None = None) -> str:
+        name = names.setdefault(alias, f"__pql_{scope}_{alias}")
+        if frame is not None:
+            frame.createOrReplaceTempView(name)
+        return name
+
+    try:
+        yield view
+    finally:
+        for name in names.values():
+            catalog.dropTempView(name)
+
+
 def sql_over(frames: dict[str, DataFrame], sql_fmt: str) -> DataFrame:
-    """Run ONE ``spark.sql`` over temp views of the given frames.
+    """Run ONE ``spark.sql`` over transient views of the given frames.
 
     ``sql_fmt`` references each frame by ``{alias}``.  Driver-cost
     device (r16, guide §4's Python-boundary tax in its driver-side
@@ -46,39 +87,13 @@ def sql_over(frames: dict[str, DataFrame], sql_fmt: str) -> DataFrame:
     AND N eager JVM analysis passes while building a plan; registering
     the input frames as temp views and parsing the whole downstream as
     one SQL statement yields the same analyzed tree in ONE pass.  The
-    views are dropped before returning — the returned DataFrame holds
-    its (already analyzed) plan, so the names only exist to address
-    the subtrees inside the single parse.
-
-    The views are NOT dropped here: ``dropTempView`` cascades an
-    UNCACHE of every cache entry whose plan contains the view's plan
-    (measured — it silently evicted the curation pipeline's persisted
-    frames, turning three persists into no-ops), and the same applies
-    to the parameterized ``spark.sql(..., df=frame)`` form, whose
-    formatter drops its internal views.  Instead the uuid-named views
-    are registered with the same session-lifecycle tracker as the
-    persists and released by :func:`unpersist_tracked` (which bench
-    and test harnesses already call between queries)."""
+    views are dropped before returning (see :func:`transient_views`),
+    so no call leaves a catalog entry behind and none evicts a cache
+    entry."""
     spark = next(iter(frames.values())).sparkSession
-    names: dict[str, str] = {}
-    for alias, frame in frames.items():
-        names[alias] = track_view(frame, alias)
-    return spark.sql(sql_fmt.format(**names))
-
-
-_TRACKED_VIEWS: list[tuple[object, str]] = []
-
-
-def track_view(frame: DataFrame, alias: str = "v") -> str:
-    """Register ``frame`` as a uuid-named temp view whose lifetime is
-    managed by :func:`unpersist_tracked` (see :func:`sql_over` for why
-    views must not be dropped eagerly).  Returns the view name."""
-    from uuid import uuid4
-
-    nm = f"__sq_{alias}_{uuid4().hex[:8]}"
-    frame.createOrReplaceTempView(nm)
-    _TRACKED_VIEWS.append((frame.sparkSession, nm))
-    return nm
+    with transient_views(spark) as view:
+        names = {alias: view(alias, frame) for alias, frame in frames.items()}
+        return spark.sql(sql_fmt.format(**names))
 
 
 _TRACKED_PERSISTS: list[DataFrame] = []
@@ -100,20 +115,13 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 
 def unpersist_tracked() -> int:
-    """Evict every DataFrame registered via :func:`tracked_persist`
-    (and drop every :func:`track_view` temp view); returns how many
-    persists were released.  Safe at any time: Spark recomputes an
-    evicted plan on next use."""
+    """Evict every DataFrame registered via :func:`tracked_persist`;
+    returns how many persists were released.  Safe at any time: Spark
+    recomputes an evicted plan on next use."""
     n = len(_TRACKED_PERSISTS)
     while _TRACKED_PERSISTS:
         try:
             _TRACKED_PERSISTS.pop().unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-    while _TRACKED_VIEWS:
-        spark, nm = _TRACKED_VIEWS.pop()
-        try:
-            spark.catalog.dropTempView(nm)
         except Exception:  # noqa: BLE001 — session already stopped
             pass
     return n

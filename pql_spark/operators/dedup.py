@@ -739,9 +739,7 @@ def ngram_jaccard_pairs(
             persisted = True
             prefix_filter = prefix_auto_decision(inv)
     if max_posting is None and prefix_filter:
-        # reused 3× below (freq, prefix join, verify); registered so a
-        # long session can evict it — persisted plans are never
-        # auto-released (see _util.unpersist_tracked)
+        # reused 3× below (freq, prefix join, verify)
         if not persisted:
             inv = tracked_persist(inv)
         # ONE SQL parse for the whole PPJoin chain (r16 driver-cost

@@ -70,7 +70,7 @@ def profile_columns(
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
     # driver-cost note (r15, extended r16): the whole aggregate+reshape
-    # is emitted as ONE SQL parse over a tracked temp view — the
+    # is emitted as ONE SQL parse over a transient temp view — the
     # per-column Column-API build cost ~0.4 s of py4j round trips per
     # call, and even the per-expression F.expr form paid eager per-op
     # analysis on the agg/select chain (~0.2 s on the curation QA
@@ -139,7 +139,7 @@ def numeric_histogram(
     if bins <= 0:
         raise ValueError("bins must be positive")
     v = f"CAST(`{col}` AS DOUBLE)"
-    # ONE SQL parse over a tracked temp view (r16) — see the
+    # ONE SQL parse over a transient temp view (r16) — see the
     # profile_columns driver-cost note; the parsed tree matches the
     # old per-op build (project → filter → [broadcast bounds join →]
     # group → project → sort)
@@ -151,7 +151,6 @@ def numeric_histogram(
             f"SELECT __h_v FROM (SELECT {v} AS __h_v FROM {{src}})"
             " WHERE __h_v IS NOT NULL"
         )
-        hint = ""
     else:
         base = (
             "SELECT /*+ BROADCAST(__h_b) */ __h_v, __h_lo, __h_hi FROM"
@@ -162,7 +161,6 @@ def numeric_histogram(
             " WHERE __h_v IS NOT NULL"
         )
         lo_s, hi_s = "__h_lo", "__h_hi"
-        hint = None  # hint lives inside `base`
     width = f"(({hi_s}) - ({lo_s})) / {float(bins)!r}D"
     raw = f"CAST(floor((__h_v - ({lo_s})) / ({width})) AS INT)"
     # degenerate single-value range: everything in bin 0

@@ -96,7 +96,17 @@ def curate_corpus(
     """
     import time as _time
 
-    from .operators._util import pinned_filter, rebalance, tracked_persist
+    if langs is not None:
+        bad = [lang for lang in langs if not isinstance(lang, str)]
+        if bad:
+            raise TypeError(f"curate_corpus: langs must be str, got {bad!r}")
+
+    from .operators._util import (
+        pinned_filter,
+        rebalance,
+        sql_over,
+        tracked_persist,
+    )
 
     def _mark(stage: str, frame: DataFrame) -> DataFrame:
         if timing is None:
@@ -154,7 +164,7 @@ def curate_corpus(
 
     cond_sql = f"quality >= {float(min_quality)!r}D"
     if langs is not None:
-        in_list = ", ".join(_slit(str(lang)) for lang in langs)
+        in_list = ", ".join(_slit(lang) for lang in langs)
         cond_sql += f" AND lang_pred IN ({in_list})"
     cond = F.expr(cond_sql)
     kept = _mark("quality_lang", pinned_filter(kept, cond))
@@ -251,19 +261,6 @@ def curate_corpus(
         from .operators.profiling import numeric_histogram, profile_columns
 
         stages.append(("final", out))
-        spark = out.sparkSession
-
-        def _view(name: str, frame: DataFrame) -> str:
-            # track_view, not an eagerly-dropped view: dropTempView
-            # cascades an UNCACHE of dependent cache entries, which
-            # would evict the pipeline's own persists (see
-            # _util.sql_over)
-            from .operators._util import track_view
-
-            return track_view(frame, f"qa_{name}")
-
-        def _sql(text: str) -> DataFrame:
-            return spark.sql(text)
 
         idq = f"`{id_col}`"
         # cohort label: did the annotated doc survive to the output?
@@ -273,16 +270,15 @@ def curate_corpus(
         # parse (r16): the old 4-op Column chain paid eager analysis
         # per op over the full annotated lineage; the SQL text yields
         # the same join+project tree in one analysis pass.
-        v_annot = _view("annot", annot)
-        v_out = _view("out", out)
-        labeled = _sql(
+        labeled = sql_over(
+            {"annot": annot, "out": out},
             f"SELECT a.{idq}, a.quality, a.lang_pred,"
             f" length(a.`{text_col}`) AS text_len,"
             " CASE WHEN o.__qa_kept THEN 'kept' ELSE 'dropped' END"
             " AS cohort"
-            f" FROM {v_annot} a LEFT JOIN"
-            f" (SELECT {idq}, TRUE AS __qa_kept FROM {v_out}) o"
-            f" ON a.{idq} = o.{idq}"
+            " FROM {annot} a LEFT JOIN"
+            f" (SELECT {idq}, TRUE AS __qa_kept FROM {{out}}) o"
+            f" ON a.{idq} = o.{idq}",
         )
         # r15 (guide §1.2 / §5): `labeled` feeds the profile AND both
         # histograms AND two stage counts below — without a persist,
@@ -326,9 +322,9 @@ def curate_corpus(
         # The whole accounting is ONE spark.sql parse instead of the
         # old per-frame agg/explode/union Column chains.
         by_name = {name: i for i, (name, _) in enumerate(stages)}
-        v_labeled = _view("labeled", labeled)
-        v_kept = _view("kept", kept_persisted)
-        v_drops = _view("drops", drops)
+        frames = {"labeled": labeled, "kept": kept_persisted, "drops": drops}
+        # cond_sql carries caller strings (langs): escape it for format
+        cond_fmt = cond_sql.replace("{", "{{").replace("}", "}}")
 
         def _emit(entries: list[tuple[int, str, str]], src: str) -> str:
             structs = ", ".join(
@@ -348,8 +344,8 @@ def curate_corpus(
                     (by_name["quality_lang"], "quality_lang", "__n_ql"),
                 ],
                 "SELECT count(1) AS __n_input,"
-                f" count(CASE WHEN {cond_sql} THEN 1 END) AS __n_ql"
-                f" FROM {v_labeled}",
+                f" count(CASE WHEN {cond_fmt} THEN 1 END) AS __n_ql"
+                " FROM {labeled}",
             ),
             _emit(
                 [
@@ -363,7 +359,7 @@ def curate_corpus(
                 ],
                 "SELECT count(1) AS __n_exact,"
                 f" count(CASE WHEN d.{idq} IS NULL THEN 1 END) AS __n_post"
-                f" FROM {v_kept} k LEFT JOIN {v_drops} d"
+                " FROM {kept} k LEFT JOIN {drops} d"
                 f" ON k.{idq} = d.{idq}",
             ),
         ]
@@ -373,10 +369,10 @@ def curate_corpus(
                 "near_dup_decontam", "final",
             ):
                 continue
-            v_mid = _view(f"mid{i}", f)
+            frames[f"mid{i}"] = f
             parts.append(
                 f"SELECT {i} AS stage_idx, '{name}' AS stage,"
-                f" count(1) AS rows FROM {v_mid}"
+                f" count(1) AS rows FROM {{mid{i}}}"
             )
-        qa["stage_counts"] = _sql(" UNION ALL ".join(parts))
+        qa["stage_counts"] = sql_over(frames, " UNION ALL ".join(parts))
     return out

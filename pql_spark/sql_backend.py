@@ -1058,12 +1058,14 @@ class _SqlEmitter:
             # MAP/STRUCT bag (re-serialized) AND for a STRING bag (the
             # string value, unescaped) alike, so one expression
             # replaces the old two-branch coalesce.  Keys that are not
-            # simple identifiers keep the per-key path form —
+            # simple ASCII identifiers keep the per-key path form —
             # json_tuple matches field names literally while
             # get_json_object treats '$.{key}' as a path, and only
             # simple keys make the two provably agree.
             simple = all(
-                key.replace("_", "").isalnum() and not key[0].isdigit()
+                key.isascii()
+                and key.replace("_", "").isalnum()
+                and not key[0].isdigit()
                 for key, _ in op.schema
             )
             if simple and op.schema:

@@ -13,13 +13,14 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from pathlib import Path
 from typing import Any
-from uuid import uuid4
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators._util import transient_views
 
 # (schema, stream_dir) per parquet path — see stream_parquet_table
 _STREAM_SRC_CACHE: dict[tuple, tuple] = {}
@@ -368,11 +369,11 @@ def run_available_now_df(
     re-wrapping with ``createDataFrame`` costs ~3 s per 100 k rows of
     pure serialization; use this variant whenever the result feeds
     further DataFrame work."""
-    name = _drain_to_memory(df, output_mode, no_data_batches)
     spark = df.sparkSession
-    out = spark.sql(f"SELECT * FROM {name}").localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    with transient_views(spark) as view:
+        name = view("mem")
+        _drain_to_memory(df, name, output_mode, no_data_batches)
+        return spark.sql(f"SELECT * FROM {name}").localCheckpoint()
 
 
 def run_available_now(
@@ -394,10 +395,11 @@ def run_available_now(
     the final windows.  Pass ``False`` explicitly for append drains of
     eager operators (stream-stream inner joins, ``dropDuplicates``,
     stateful kernels), which emit their matches in the data batch."""
-    name = _drain_to_memory(df, output_mode, no_data_batches)
-    out = df.sparkSession.sql(f"SELECT * FROM {name}").collect()
-    df.sparkSession.catalog.dropTempView(name)
-    return out
+    spark = df.sparkSession
+    with transient_views(spark) as view:
+        name = view("mem")
+        _drain_to_memory(df, name, output_mode, no_data_batches)
+        return spark.sql(f"SELECT * FROM {name}").collect()
 
 
 _ND_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -405,16 +407,17 @@ _ND_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 def _drain_to_memory(
     df: DataFrame,
+    name: str,
     output_mode: str,
     no_data_batches: bool | None = None,
-) -> str:
-    """Shared drain: run ``df`` into a uniquely named memory sink with
-    ``availableNow`` and return the sink's temp-view name.
+) -> None:
+    """Shared drain: run ``df`` into the memory sink ``name`` (a
+    reserved transient view name; the sink registers the view) with
+    ``availableNow``.
 
     ``no_data_batches`` — see :func:`run_available_now`; ``None``
     resolves to False (skip the finalize batch) for update/complete,
     True (keep it) for append."""
-    name = f"mem_{uuid4().hex[:12]}"
     spark = df.sparkSession
     if no_data_batches is None:
         no_data_batches = output_mode == "append"
@@ -465,7 +468,6 @@ def _drain_to_memory(
             spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
         except Exception:
             pass
-    return name
 
 
 # ------------------------------------------------------------------ sinks
@@ -695,12 +697,8 @@ def stream_upsert_to_table(
             if others
             else batch_df.dropDuplicates(keys)
         )
-        view = f"__pql_upsert_{batch_id}"
-        dedup.createOrReplaceTempView(view)
-        try:
-            sp.sql(merge_upsert_sql(table, view, keys))
-        finally:
-            sp.catalog.dropTempView(view)
+        with transient_views(sp) as view:
+            sp.sql(merge_upsert_sql(table, view("upsert", dedup), keys))
 
     writer = (
         df.writeStream.foreachBatch(merge)

@@ -70,9 +70,9 @@ def test_sql_backend_preserves_user_views(spark, tables):
         assert [r.sentinel for r in spark.sql(
             "SELECT * FROM EV"
         ).collect()] == [99]
-        # and no transient __pql_v* views linger in the catalog
+        # and no transient __pql_* views linger in the catalog
         names = {t.name.lower() for t in spark.catalog.listTables()}
-        assert not any(v.startswith("__pql_v") for v in names)
+        assert not any(v.startswith("__pql_") for v in names)
     finally:
         spark.catalog.dropTempView("EV")
 
@@ -113,7 +113,7 @@ def test_sql_backend_serves_csv_externaldata(spark, tmp_path):
     # the transient reader view is dropped after the one spark.sql call
     leftover = [
         t.name for t in spark.catalog.listTables()
-        if t.name.startswith("__pql_v")
+        if t.name.startswith("__pql_")
     ]
     assert leftover == []
 

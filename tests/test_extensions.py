@@ -927,6 +927,31 @@ def test_bag_unpack_schema_sql_backend(spark):
     assert df_rows == sql_rows == [(1, 1, "a"), (2, 2, None), (3, None, None)]
 
 
+def test_bag_unpack_non_ascii_key_keeps_path_form(spark):
+    # the one-parse json_tuple fast path only takes ASCII identifier
+    # keys; a non-ASCII key keeps the per-key path form and both
+    # backends agree
+    from pql_spark import PqlEngine
+
+    df = spark.createDataFrame(
+        [(1, '{"é1": 5, "x": 1}'), (2, '{"x": 2}'), (3, None)],
+        "id long, bag string",
+    )
+    q = (
+        "B | evaluate bag_unpack(bag) : (é1: long, x: long)"
+        " | sort by id asc"
+    )
+    rows = {
+        b: [tuple(r) for r in PqlEngine(spark, {"B": df}, backend=b)
+            .query(q).collect()]
+        for b in ("df", "sql")
+    }
+    assert rows["sql"] == rows["df"] == [
+        (1, 5, 1), (2, None, 2), (3, None, None),
+    ]
+    assert "json_tuple" not in PqlEngine(spark, {"B": df}).to_sql(q)
+
+
 def test_partition_top(spark):
     from pql_spark import PqlEngine
 

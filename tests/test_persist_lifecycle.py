@@ -1,10 +1,15 @@
 """The tracked-persist registry must actually drain (ADVICE r9):
 ``tracked_persist`` parks strong DataFrame refs until someone evicts,
 so the session lifecycle — ``PqlEngine.close()`` / context manager,
-and bench.py's per-query drain — must call ``unpersist_tracked``."""
+and bench.py's per-query drain — must call ``unpersist_tracked``.
+That drain releases persists only: temp views are never parked, each
+transient view is dropped as soon as its one ``spark.sql`` returns
+(``operators._util.transient_views``), and that drop never evicts a
+persist."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pql_spark.engine import PqlEngine
@@ -54,3 +59,38 @@ def test_pipeline_persists_are_tracked_and_drain(spark):
         out.count()
         assert len(_TRACKED_PERSISTS) >= 1
     assert _TRACKED_PERSISTS == []
+
+
+def test_curate_qa_keeps_tracked_persists_cached(spark):
+    """Building the QA report drops its views without evicting the
+    pipeline's persists, and the report reads them from memory."""
+    from pql_spark.pipelines import curate_corpus
+
+    unpersist_tracked()
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 7} the quick brown fox " * 4) for i in range(40)],
+        "doc_id long, text string",
+    )
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    qa: dict = {}
+    with PqlEngine(spark):
+        curate_corpus(docs, min_quality=0.0, langs=None, qa=qa)
+        persists = list(_TRACKED_PERSISTS)
+        assert len(persists) >= 3
+        counts = qa["stage_counts"]
+        counts.collect()
+        assert all(cm.lookupCachedData(p._jdf).isDefined() for p in persists)
+        plan = counts._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+        assert not [
+            t.name for t in spark.catalog.listTables()
+            if t.name.lower().startswith(("__sq_", "__pql_"))
+        ]
+
+
+def test_curate_rejects_non_string_langs(spark):
+    from pql_spark.pipelines import curate_corpus
+
+    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    with pytest.raises(TypeError, match="langs"):
+        curate_corpus(docs, langs=["en", 3])
